@@ -4,6 +4,7 @@ regression fails loudly instead of costing 100x on a real cluster."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.functions import broadcast as F_broadcast
 from pyspark.sql.functions import col as F_col
 
@@ -20,6 +21,18 @@ from tf_datapipeline_spark.plans.inspect import (
 
 def _q(name, spark):
     return registry.queries()[name](spark, SF_SMOKE)
+
+
+@pytest.fixture(scope="module")
+def batch_query_dfs(spark):
+    """(name, DataFrame) for every registered batch query at SF_SMOKE,
+    built once for the engine-wide plan audits below (streaming results
+    come from a memory sink scan, so stream queries are left out)."""
+    return [
+        (name, fn(spark, SF_SMOKE))
+        for name, fn in sorted(registry.queries().items())
+        if "stream" not in name
+    ]
 
 
 def test_filter_reaches_parquet_scan(spark):
@@ -203,7 +216,7 @@ def test_salted_join_matches_plain_join(spark):
     assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in plain.collect()}
 
 
-def test_no_accidental_cross_products(spark):
+def test_no_accidental_cross_products(batch_query_dfs):
     """Engine-wide join audit: no query may plan a CartesianProduct, and
     every BroadcastNestedLoopJoin must broadcast a relation STRUCTURALLY
     bounded by the query text — verified per-NLJ by
@@ -252,10 +265,7 @@ def test_no_accidental_cross_products(spark):
     # failure must not shadow the rest of the sweep (round-5 lesson: an
     # in-loop assert left q7c/q9a/q9b unaudited).
     violations: list[tuple[str, object]] = []
-    for name, fn in sorted(registry.queries().items()):
-        if "stream" in name:
-            continue  # streaming results come from a memory sink scan
-        df = fn(spark, SF_SMOKE)
+    for name, df in batch_query_dfs:
         joins = join_strategies(df)
         if "CartesianProduct" in joins:
             violations.append((name, joins))
@@ -303,7 +313,7 @@ def test_quantile_check_broadcasts_sketch(spark):
     assert joins and all(j == "BroadcastHashJoin" for j in joins), joins
 
 
-def test_no_row_wise_python_udfs(spark):
+def test_no_row_wise_python_udfs(batch_query_dfs):
     """Engine-wide UDF audit: no batch query may plan a BatchEvalPython
     (row-at-a-time Python UDF — the 10-100x slow path). Python is allowed
     only Arrow-batched: MapInPandas / FlatMapGroupsInPandas (decode,
@@ -311,10 +321,8 @@ def test_no_row_wise_python_udfs(spark):
     array kernels)."""
     from tf_datapipeline_spark.plans.inspect import formatted_plan
 
-    for name, fn in sorted(registry.queries().items()):
-        if "stream" in name:
-            continue  # streaming results come from a memory sink scan
-        plan = formatted_plan(fn(spark, SF_SMOKE))
+    for name, df in batch_query_dfs:
+        plan = formatted_plan(df)
         assert "BatchEvalPython" not in plan, (
             f"{name} plans a row-at-a-time Python UDF"
         )

@@ -190,16 +190,51 @@ def test_sig_materialization_is_per_invocation(spark):
     assert rows_a == rows_b and rows_a
 
 
+def test_adaptive_scan_gate_follows_split_count(spark, tmp_path):
+    """The adaptive scan device repartitions only a scan with fewer
+    splits than the session has cores: the single-file SF_SMOKE
+    documents table gets defaultParallelism, while a copy stored as
+    defaultParallelism files already parallelizes, so the device returns
+    0 and the dedup builders read the bare `documents` view."""
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark.catalog import (
+        adaptive_scan_parallelism,
+        docs_scan_source,
+        load_table,
+        table_path,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, SF_SMOKE, "documents")
+    assert docs.rdd.getNumPartitions() < cores
+    assert adaptive_scan_parallelism(spark, SF_SMOKE) == cores
+
+    split_dir = str(tmp_path)
+    docs.repartition(cores).write.parquet(table_path(split_dir, "documents"))
+    assert load_table(spark, split_dir, "documents").rdd.getNumPartitions() >= cores
+    assert adaptive_scan_parallelism(spark, split_dir) == 0
+    assert docs_scan_source(spark, split_dir) == "documents"
+
+
 def test_register_views_recovers_dropped_view(spark):
     """r12 (r11 advice): the register_views same-dir skip must notice a
-    dropped temp view and re-register instead of silently returning."""
+    dropped temp view and re-register instead of silently returning. A
+    view REPLACED with foreign data is outside the skip's contract: the
+    caller calls invalidate_caches(), and the next register_views
+    re-points the view at the table."""
     from tests.conftest import SF_SMOKE
-    from tf_datapipeline_spark.catalog import register_views
+    from tf_datapipeline_spark.catalog import invalidate_caches, register_views
 
     register_views(spark, SF_SMOKE)
     spark.catalog.dropTempView("documents")
     register_views(spark, SF_SMOKE)
     assert spark.catalog.tableExists("documents")
+
+    n_docs = spark.table("documents").count()
+    spark.range(3).createOrReplaceTempView("documents")
+    invalidate_caches()
+    register_views(spark, SF_SMOKE)
+    assert spark.table("documents").count() == n_docs != 3
 
 
 def test_approx_top_k_certification_regime(spark):

@@ -85,8 +85,8 @@ def adaptive_scan_parallelism(
     consumer order-independent. At production scale the input has at
     least as many splits as cores and this returns 0: no shuffle is
     ever added where the scan already parallelizes. Measured (matched
-    quiet window, tools/exp_sig.py): the MinHash signature build
-    2.6 s → 0.85 s at sf0.1/local[32]."""
+    quiet window, OPTIMIZATION_r12.md "Adaptive scan parallelism"): the
+    MinHash signature build 2.6 s → 0.85 s at sf0.1/local[32]."""
     key = (
         spark.sparkContext.applicationId,
         os.path.abspath(sf_dir),
@@ -193,15 +193,18 @@ _VIEWS_AT: dict[str, str] = {}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL surface)."""
+    """Register every table as a temp view (for the SQL surface).
+
+    A repeat call for the same directory is a no-op unless a view was
+    dropped in the meantime. A caller that REPLACES one of these views
+    with other data must call invalidate_caches() before the next
+    register_views, or later callers keep reading the replacement."""
     app = spark.sparkContext.applicationId
     target = os.path.abspath(sf_dir)
-    # r12 (r11 advice): the skip is only valid while ALL views are still
-    # registered — a test (or any caller) that drops/replaces a view
-    # in-session would otherwise leave later same-dir callers with a
-    # missing or foreign view. tableExists is a local catalog lookup
-    # (~ms for all 10), not a footer read, so the guard keeps the memo's
-    # ~1.2s saving.
+    # The skip heals only DROPPED views: it checks that every name still
+    # exists, not what each view points at. tableExists is a local
+    # catalog lookup (~ms for all 10), not a footer read, so the guard
+    # keeps the memo's ~1.2s saving.
     if _VIEWS_AT.get(app) == target and all(
         spark.catalog.tableExists(name) for name in TABLES
     ):

@@ -34,6 +34,15 @@ from tf_datapipeline_spark.catalog import (
     load_table,
     register_views,
 )
+from tf_datapipeline_spark.functions.dialect import (
+    explode,
+    materialized,
+    series,
+    shl1,
+    shr,
+    split_ws,
+    string_type,
+)
 from tf_datapipeline_spark.functions.texthash import (
     MERSENNE,
     minhash_params,
@@ -98,25 +107,26 @@ def q61_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shared SQL fragments (dialect = "spark" | "duckdb"). The only dialect
-# differences are array-explosion syntax and bit-shift spelling; the hash
-# arithmetic is byte-identical.
+# Shared SQL fragments (dialect = "spark" | "duckdb"; spellings come
+# from functions/dialect.py, the hash arithmetic is byte-identical).
+# `source` is the SQL relation the documents are read from: the bare
+# `documents` view, or a repartitioned / candidate-restricted projection
+# of it (catalog.docs_scan_source) on the Spark side.
 # --------------------------------------------------------------------------
-def _sql_shingles(dialect: str, distinct: bool = True) -> str:
+def _sql_shingles(
+    dialect: str, distinct: bool = True, source: str = "documents"
+) -> str:
     """CTE body producing (doc_id, h) — hashed 5-char
     shingles. The md5 digest is projected once in an inner SELECT; the
     8-digit decode references that column (not 8 separate md5 calls)."""
-    if dialect == "spark":
-        pos = "explode(sequence(1, length(text) - 4)) AS pos"
-    else:
-        pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
+    pos = explode(dialect, series(dialect, 1, "length(text) - 4"))
     d = "DISTINCT" if distinct else ""
     return f"""
       SELECT {d} doc_id, {sql_hash32_from_md5_dialect("md5s", dialect)} AS h
       FROM (
         SELECT doc_id, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
-        FROM (SELECT doc_id, text, {pos}
-              FROM documents WHERE length(text) >= 5)
+        FROM (SELECT doc_id, text, {pos} AS pos
+              FROM {source} WHERE length(text) >= 5)
       )
     """
 
@@ -139,19 +149,22 @@ def _memo_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple[str, str, st
     return (spark.sparkContext.applicationId, sf_dir, kind)
 
 
-def _sql_signature(dialect: str = "duckdb") -> str:
+def _sql_signature(dialect: str = "duckdb", source: str = "documents") -> str:
     """MinHash signature aggregation. MIN over a multiset equals MIN over
     the set, so the Spark side aggregates the RAW shingle stream — the
     map-side partial MIN collapses each partition to one row per doc
     before the shuffle, skipping the DISTINCT's full 1-row-per-shingle
     exchange entirely (the dominant cost at corpus scale). The oracle
-    reads the distinct `shingles` CTE: same values either way."""
+    reads the distinct `shingles` CTE: same values either way (and
+    ignores `source`)."""
     mins = ",\n             ".join(
         f"MIN({sql_minhash_perm('h', a, b)}) AS m{i}"
         for i, (a, b) in enumerate(_PARAMS)
     )
     src = (
-        f"({_sql_shingles('spark', distinct=False)})" if dialect == "spark" else "shingles"
+        f"({_sql_shingles('spark', distinct=False, source=source)})"
+        if dialect == "spark"
+        else "shingles"
     )
     return f"SELECT doc_id,\n             {mins}\n      FROM {src} GROUP BY doc_id"
 
@@ -178,10 +191,9 @@ def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     # adaptive scan parallelism (catalog.docs_scan_source): the
     # md5-per-5-gram stream is the family's dominant cost and runs on
     # ONE core when the local corpus is a single parquet file —
-    # measured 2.6 s → 0.85 s at sf0.1 (tools/exp_sig.py, quiet window)
-    sql = _sql_signature("spark").replace(
-        "FROM documents WHERE", f"FROM {docs_scan_source(spark, sf_dir)} WHERE"
-    )
+    # measured 2.6 s → 0.85 s at sf0.1 (quiet window; OPTIMIZATION_r12.md
+    # "Adaptive scan parallelism")
+    sql = _sql_signature("spark", source=docs_scan_source(spark, sf_dir))
     df = spark.sql(sql).localCheckpoint()
     df.createOrReplaceTempView("sig")
     return df
@@ -270,26 +282,32 @@ def q63_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_lsh_pairs_sql("spark"))
 
 
-def _simhash_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS term"
-        bit = "shiftright(h, {b}) & 1"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term"
-        bit = "(h >> {b}) & 1"
-    bit_terms = " + ".join(
-        f"(CASE WHEN SUM(CASE WHEN {bit.format(b=b)} = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN {2 ** b} ELSE 0 END)"
-        for b in range(_SIMHASH_BITS)
-    )
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, {tok} FROM documents
+def _simhash_ctes(dialect: str, source: str = "documents") -> str:
+    """`toks, th` CTEs: one 32-bit hash per whitespace token of each doc."""
+    return f"""toks AS (
+      SELECT doc_id, {explode(dialect, split_ws(dialect, "text"))} AS term
+      FROM {source}
     ), th AS (
       SELECT doc_id, {sql_hash32_dialect("term", dialect)} AS h FROM toks
+    )"""
+
+
+def _simhash_agg(dialect: str) -> str:
+    """Per-doc SimHash over `th`: bit b is the sign of the doc's sum of
+    ±1 votes from each token hash's bit b."""
+    bit_terms = " + ".join(
+        f"(CASE WHEN SUM(CASE WHEN {shr(dialect, 'h', b)} & 1 = 1 THEN 1 ELSE -1 END)"
+        f" > 0 THEN {2 ** b} ELSE 0 END)"
+        for b in range(_SIMHASH_BITS)
     )
-    SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
-    FROM th GROUP BY doc_id
+    return f"""SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
+      FROM th GROUP BY doc_id"""
+
+
+def _simhash_sql(dialect: str, source: str = "documents") -> str:
+    return f"""
+    WITH {_simhash_ctes(dialect, source)}
+    {_simhash_agg(dialect)}
     """
 
 
@@ -302,12 +320,7 @@ def q64_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     # adaptive scan parallelism — see _materialize_sig (the per-token
     # md5 stream serializes on a 1-task scan otherwise)
-    return spark.sql(
-        _simhash_sql("spark").replace(
-            "FROM documents\n",
-            f"FROM {docs_scan_source(spark, sf_dir)}\n",
-        )
-    )
+    return spark.sql(_simhash_sql("spark", docs_scan_source(spark, sf_dir)))
 
 
 def _jaccard_body() -> str:
@@ -360,9 +373,10 @@ def _materialize_shingle_sets(spark: SparkSession, sf_dir: str) -> None:
         f"SELECT DISTINCT explode(array(doc_a, doc_b)) AS doc_id "
         f"FROM ({_band_candidates()})"
     ).createOrReplaceTempView("_cand_ids")
-    cand_shingles = _sql_shingles("spark", distinct=False).replace(
-        "FROM documents",
-        f"FROM (SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
+    cand_shingles = _sql_shingles(
+        "spark",
+        distinct=False,
+        source=f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
         " LEFT SEMI JOIN _cand_ids c ON c.doc_id = d.doc_id)",
     )
     spark.sql(
@@ -377,7 +391,7 @@ def _jaccard_sql(dialect: str) -> str:
 
 
 def _jaccard_spark_body() -> str:
-    """Spark-side verify: per-doc sorted shingle ARRAYS once (one
+    """Spark-side verify: per-doc shingle-set ARRAYS once (one
     group-by), then each candidate pair is two array lookups and a
     codegen `array_intersect` — the 70M-row shingle⋈shingle exchange of
     the portable form becomes a 2-join of 248k candidate rows against
@@ -786,7 +800,7 @@ def q67_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism/oracle: cells come from the same fixed seed centroids as
 # q73's IVF (corpus vectors at vec_id = 8 + 37*c), assignment is argmax
 # cosine with ties broken by cell index, and every dot product is an
-# ORDER-PINNED packed-array double fold (fold_dot/fold_norm2, the r7
+# ORDER-PINNED packed-array double fold (dialect.fold_dot/fold_norm2, the r7
 # migration off the DECIMAL(38,12) device) — bit-identical in Spark and
 # DuckDB by construction, so the whole pipeline (assignment -> in-cell
 # pairs -> keep flags) is value-checked, not rows-only. The migration
@@ -823,11 +837,10 @@ _Q68_KEEPER_CAP = 512  # keeper-side candidates per cell (see header)
 
 
 def _semantic_dedup_sql(dialect: str) -> str:
+    from tf_datapipeline_spark.functions.dialect import fold_dot, fold_norm2
     from tf_datapipeline_spark.operators.similarity import (
         _CENTROID_STRIDE,
         _N_CELLS,
-        fold_dot,
-        fold_norm2,
     )
 
     cent_vals = ", ".join(
@@ -1412,12 +1425,6 @@ def _bloom_body(dialect: str) -> str:
     # bit (~1/m of the corpus), silently inflating the FP rate. Same
     # arithmetic in both dialects, so oracle parity is unaffected.
     h2 = f"(1 + (({sql_hash32_from_md5_at('m', 9, dialect)}) % {_BLOOM_M - 1}))"
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
     ks = ", ".join(f"({k})" for k in range(_BLOOM_K))
     return f"""
     WITH corpus AS (
@@ -1430,7 +1437,7 @@ def _bloom_body(dialect: str) -> str:
     ),
     filter_words AS (
       SELECT CAST(FLOOR(pos / {_BLOOM_WORD}.0) AS INT) AS word_idx,
-             BIT_OR({shl(f"pos % {_BLOOM_WORD}")}) AS bits
+             BIT_OR({shl1(dialect, f"pos % {_BLOOM_WORD}")}) AS bits
       FROM cpos GROUP BY 1
     ),
     delta AS (
@@ -1445,7 +1452,7 @@ def _bloom_body(dialect: str) -> str:
     probe AS (
       SELECT d.doc_id,
              MIN(CASE WHEN (COALESCE(f.bits, 0)
-                            & {shl(f"d.pos % {_BLOOM_WORD}")}) <> 0
+                            & {shl1(dialect, f"d.pos % {_BLOOM_WORD}")}) <> 0
                       THEN 1 ELSE 0 END) AS maybe_dup
       FROM dpos d
       LEFT JOIN filter_words f
@@ -1713,21 +1720,18 @@ def q6g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 128
 
 
-def _kmv_sketch_sql(dialect: str) -> str:
+def _kmv_sketch_sql(dialect: str, source: str = "documents") -> str:
     """The corpus-proportional part: per-source bottom-k shingle-hash
     sketch (k x N_sources rows out)."""
-    if dialect == "spark":
-        pos = "explode(sequence(1, length(text) - 4)) AS pos"
-    else:
-        pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
+    pos = explode(dialect, series(dialect, 1, "length(text) - 4"))
     h = sql_hash60_from_md5_dialect("md5s", dialect)
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     return f"""sh AS {mat}(
       SELECT DISTINCT source, {h} AS h
       FROM (
         SELECT source, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
-        FROM (SELECT source, text, {pos}
-              FROM documents WHERE length(text) >= 5)
+        FROM (SELECT source, text, {pos} AS pos
+              FROM {source} WHERE length(text) >= 5)
       )
     ),
     sk AS {mat}(
@@ -1788,10 +1792,8 @@ def q6h_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle scan: materialize the k x N_sources sketch (bounded
     # metadata at any corpus size), then run the pair/merge arithmetic
     # over it — the Spark twin of the oracle's MATERIALIZED hint.
-    sk_sql = _kmv_sketch_sql("spark").replace(
-        "FROM documents WHERE",
-        f"FROM {docs_scan_source(spark, sf_dir)} WHERE",
-    )  # adaptive scan parallelism — see _materialize_sig
+    # adaptive scan parallelism — see _materialize_sig
+    sk_sql = _kmv_sketch_sql("spark", docs_scan_source(spark, sf_dir))
     spark.sql(
         f"WITH {sk_sql} SELECT * FROM sk"
     ).localCheckpoint().createOrReplaceTempView("kmv_sk_mat")
@@ -1819,25 +1821,11 @@ def q6h_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ROW_NUMBER for one max_by pass). Everything is integer-exact.
 # --------------------------------------------------------------------------
 def _canonical_pick_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS term"
-        bit = "shiftright(h, {b}) & 1"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term"
-        bit = "(h >> {b}) & 1"
-    bit_terms = " + ".join(
-        f"(CASE WHEN SUM(CASE WHEN {bit.format(b=b)} = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN {2 ** b} ELSE 0 END)"
-        for b in range(_SIMHASH_BITS)
-    )
+    # q64's SimHash CTEs over the bare `documents` view: no adaptive
+    # repartition here (q6i's plan is unchanged by sharing them)
     return f"""
-    WITH toks AS (
-      SELECT doc_id, {tok} FROM documents
-    ), th AS (
-      SELECT doc_id, {sql_hash32_dialect("term", dialect)} AS h FROM toks
-    ), sh AS (
-      SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
-      FROM th GROUP BY doc_id
+    WITH {_simhash_ctes(dialect)}, sh AS (
+      {_simhash_agg(dialect)}
     ), grp AS (
       SELECT d.source, d.n_chars,
              ROW_NUMBER() OVER (PARTITION BY s.simhash
@@ -1969,7 +1957,7 @@ def _cal_pairs_sql(dialect: str) -> str:
     ≤ ~32k-pair table once — `cal_pairs` is consumed by both the exact-
     Jaccard arm and the capture-scoring arm, and each reference
     re-derived the per-doc md5 block keying from a documents scan."""
-    str_t = "STRING" if dialect == "spark" else "VARCHAR"
+    str_t = string_type(dialect)
     return f"""nblk AS (
       SELECT GREATEST(CAST(16 AS BIGINT),
                       CAST(CEIL(COUNT(*) / CAST(32.0 AS DOUBLE)) AS BIGINT))
@@ -2015,8 +2003,8 @@ def _lsh_calibration_body(dialect: str) -> str:
         else _cal_pairs_sql(dialect)
     )
     if dialect == "spark":
-        # r12 (the q65 set idiom, guide §2.4): per-doc sorted shingle
-        # SETS are already materialized (cal_sets); |A∩B| is then one
+        # r12 (the q65 set idiom, guide §2.4): per-doc shingle SETS
+        # are already materialized (cal_sets); |A∩B| is then one
         # codegen array_intersect per pair instead of the shingle
         # self-join + two COUNT(*) arms (n_common and sz are the same
         # integers either way: sets are distinct, |A∩B| is |A∩B|). The
@@ -2104,9 +2092,10 @@ def _materialize_cal_sets(spark: SparkSession, sf_dir: str) -> None:
         """
     )
     ids.createOrReplaceTempView("_cal_ids")
-    sampled_shingles = _sql_shingles("spark", distinct=False).replace(
-        "FROM documents",
-        f"FROM (SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
+    sampled_shingles = _sql_shingles(
+        "spark",
+        distinct=False,
+        source=f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
         " LEFT SEMI JOIN _cal_ids c ON c.doc_id = d.doc_id)",
     )
     spark.sql(

@@ -2173,7 +2173,9 @@ def q4zj_entry_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ab_uplift_sql(dialect: str) -> str:
     from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
 
-    cast_t = "STRING" if dialect == "spark" else "VARCHAR"
+    from tf_datapipeline_spark.functions.dialect import string_type
+
+    cast_t = string_type(dialect)
     h = sql_hash32_dialect(f"'ab-' || CAST(user_id AS {cast_t})", dialect)
     rate = "(CAST({c} AS DOUBLE) / {n})"
     ra = rate.format(c="c_a", n="n_a")

@@ -18,6 +18,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tf_datapipeline_spark.catalog import register_views
+from tf_datapipeline_spark.functions.dialect import (
+    array_filter,
+    array_size,
+    broadcast,
+    datediff_days,
+    day_of_month,
+    hour,
+    join_strings,
+    materialized,
+    series_rows,
+    shl1,
+    sorted_list_agg,
+    string_type,
+)
 from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
 from tf_datapipeline_spark.registry import query
 
@@ -64,10 +78,7 @@ def _interleave(xb: str, yb: str) -> str:
 def _bucketed_sql(dialect: str) -> str:
     """The (xb, yb) bucket-id projection of orders (bounds-normalized
     8-bit grid coordinates) — the shared input of zfiles/lfiles/hits."""
-    if dialect == "spark":
-        day = "datediff(o_orderdate, DATE '1970-01-01')"
-    else:
-        day = "datediff('day', DATE '1970-01-01', o_orderdate)"
+    day = datediff_days(dialect, "DATE '1970-01-01'", "o_orderdate")
     xb = (
         f"LEAST(CAST(FLOOR((d.ep_day - b.min_day) * {_GRID}.0 "
         f"/ (b.max_day - b.min_day + 1)) AS BIGINT), {_GRID - 1})"
@@ -461,7 +472,7 @@ _COMPACT_TARGET = 1000  # rows per compacted output file
 
 
 def _compaction_body(dialect: str) -> str:
-    hr = "hour(ts)" if dialect == "spark" else "EXTRACT(hour FROM ts)"
+    hr = hour(dialect, "ts")
     return f"""
     WITH files AS (
       SELECT CAST(ts AS DATE) AS day, CAST({hr} AS INT) AS hr,
@@ -528,16 +539,13 @@ _RP_TARGET = 4096  # expected sample rows, corpus-size-independent
 
 def _range_partition_body(dialect: str) -> str:
     b = _RP_BUCKETS
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
+    ctype = string_type(dialect)
     h = sql_hash32_dialect(f"'rp-' || CAST(o_orderkey AS {ctype})", dialect)
-    if dialect == "spark":
-        idx = f"SELECT explode(sequence(1, {b - 1})) AS i"
-        arr = "array_sort(collect_list(val))"
-        nle = "size(filter(bs, x -> x <= val))"
-    else:
-        idx = f"SELECT i FROM generate_series(1, {b - 1}) AS t(i)"
-        arr = "list_sort(list(val))"
-        nle = "len(list_filter(bs, x -> x <= val))"
+    idx = series_rows(dialect, 1, b - 1, "i")
+    arr = sorted_list_agg(dialect, "val")
+    nle = array_size(
+        dialect, array_filter(dialect, "bs", "x -> x <= val"), duckdb_fn="len"
+    )
     return f"""
     WITH stats AS (SELECT COUNT(*) AS cnt FROM orders),
     sample AS (
@@ -607,7 +615,7 @@ _KMV_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _kmv_base_sql(dialect: str) -> str:
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
+    ctype = string_type(dialect)
     h = sql_hash32_dialect(f"'kmv-' || CAST(event_id AS {ctype})", dialect)
     return f"""
       SELECT CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hr,
@@ -626,14 +634,13 @@ def _materialize_kmv_base(spark: SparkSession, sf_dir: str) -> None:
 
 def _kmv_rollup_body(dialect: str) -> str:
     k = _KMV_K
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
+    ctype = string_type(dialect)
     elem = f"CAST(hv AS {ctype}) || ':' || CAST(ek AS {ctype})"
-    if dialect == "spark":
-        base = "SELECT * FROM kmv_base_mat"
-        fp = f"md5(concat_ws(',', array_sort(collect_list({elem}))))"
-    else:
-        base = _kmv_base_sql(dialect)
-        fp = f"md5(array_to_string(list_sort(list({elem})), ','))"
+    sep = "','"
+    base = (
+        "SELECT * FROM kmv_base_mat" if dialect == "spark" else _kmv_base_sql(dialect)
+    )
+    fp = f"md5({join_strings(dialect, sorted_list_agg(dialect, elem), sep)})"
     p50 = "CAST(FLOOR((kk + 1) / 2.0) AS BIGINT)"
     p90 = "CAST(FLOOR((9 * kk + 9) / 10.0) AS BIGINT)"
     return f"""
@@ -741,15 +748,9 @@ _BSK_PROBES = 8
 def _bloom_skip_body(dialect: str) -> str:
     from tf_datapipeline_spark.functions.texthash import sql_hash32_from_md5_at
 
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
+    ctype = string_type(dialect)
     h1 = sql_hash32_from_md5_at("m", 1, dialect)
     h2 = f"(1 + (({sql_hash32_from_md5_at('m', 9, dialect)}) % {_BSK_M - 1}))"
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
     ks = ", ".join(f"({k})" for k in range(_BSK_K))
     return f"""
     WITH maxk AS (SELECT MAX(o_orderkey) AS mk FROM orders),
@@ -770,7 +771,7 @@ def _bloom_skip_body(dialect: str) -> str:
       SELECT file_id,
              CAST(FLOOR(((h1 + k.k * h2) % {_BSK_M}) / {_BSK_WORD}.0) AS INT)
                AS word_idx,
-             BIT_OR({shl(f"((h1 + k.k * h2) % {_BSK_M}) % {_BSK_WORD}")})
+             BIT_OR({shl1(dialect, f"((h1 + k.k * h2) % {_BSK_M}) % {_BSK_WORD}")})
                AS bits
       FROM fhash, (VALUES {ks}) AS k(k)
       GROUP BY 1, 2
@@ -792,7 +793,7 @@ def _bloom_skip_body(dialect: str) -> str:
     checks AS (
       SELECT p.ck, f.file_id,
              MIN(CASE WHEN (COALESCE(w.bits, 0)
-                            & {shl(f"p.pos % {_BSK_WORD}")}) <> 0
+                            & {shl1(dialect, f"p.pos % {_BSK_WORD}")}) <> 0
                       THEN 1 ELSE 0 END) AS hit
       FROM ppos p
       CROSS JOIN frows f
@@ -911,7 +912,7 @@ def _dv_body(dialect: str) -> str:
     # pospl is referenced 3x (two DELETE scans + the flagged join):
     # MATERIALIZED in DuckDB so the window pass runs once (plain CTEs
     # inline per reference); Spark reads the session-materialized view
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     return f"""
     WITH pospl AS {mat}({_dv_pospl_cte(dialect)}),
     dv1 AS (
@@ -976,7 +977,7 @@ _IVM_CENTS = "CAST(FLOOR(o_totalprice * 100) AS BIGINT)"
 def _ivm_body(dialect: str = "spark") -> str:
     # old/new snapshots are each referenced twice (base/diff, diff/direct):
     # MATERIALIZED in DuckDB so each snapshot scan runs once
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     return f"""
     WITH old AS {mat}(
       SELECT o_orderkey, o_orderpriority, {_IVM_CENTS} AS cents
@@ -1087,7 +1088,7 @@ def q9h_incremental_view_maintenance(
 
 
 def _scd2_body(dialect: str = "spark") -> str:
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     return f"""
     WITH old AS {mat}(
       SELECT o_orderkey, {_IVM_CENTS} AS cents
@@ -1264,7 +1265,7 @@ _VACUUM_RETENTION_COMMIT = 5
 
 
 def _vacuum_body(dialect: str) -> str:
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     return f"""
     WITH pospl AS {mat}({_dv_pospl_cte(dialect)}),
     dv1 AS (
@@ -1433,8 +1434,8 @@ def q9m_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # manifest-level OCC. All integer arithmetic; hash-exact cross-engine.
 # --------------------------------------------------------------------------
 def _occ_body(dialect: str) -> str:
-    hr = "hour(ts)" if dialect == "spark" else "EXTRACT(hour FROM ts)"
-    dom = "day(day)" if dialect == "spark" else "EXTRACT(day FROM day)"
+    hr = hour(dialect, "ts")
+    dom = day_of_month(dialect, "day")
     return f"""
     WITH files AS (
       SELECT CAST(ts AS DATE) AS day, CAST({hr} AS INT) AS hr,
@@ -1574,7 +1575,7 @@ _N_COMMITS = 4
 
 
 def _time_travel_body(dialect: str = "spark") -> str:
-    hint = "/*+ BROADCAST(s) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "s")
     versions = ", ".join(f"({v})" for v in range(1, _N_COMMITS + 1))
     return f"""
     WITH log AS ({_commit_log_cte()}),

@@ -1054,7 +1054,9 @@ _IMP_TARGET = "CAST(0.2 AS DOUBLE)"  # sampled fraction of documents
 def _importance_sample_sql(dialect: str) -> str:
     from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
 
-    cast_t = "STRING" if dialect == "spark" else "VARCHAR"
+    from tf_datapipeline_spark.functions.dialect import string_type
+
+    cast_t = string_type(dialect)
     h = sql_hash32_dialect(f"'imp-' || CAST(doc_id AS {cast_t})", dialect)
     p = (
         f"LEAST(CAST(1 AS DOUBLE), CAST(n_chars AS DOUBLE)"

@@ -3,7 +3,7 @@ cosine top-k baseline + an LSH-bucketed approximate variant for scale).
 
 q70 (brute force) is the correctness baseline and fully oracle-checked:
 dot products and norms are ORDER-PINNED packed-array double folds
-(fold_dot/fold_norm2 below) — both engines fold the same array left to
+(functions/dialect.py fold_dot/fold_norm2) — both engines fold the same array left to
 right, so every value is bit-identical by construction (the round-7
 migration off the DECIMAL(38,12) device, whose DuckDB double→decimal
 cast mis-rounds near half-ulp boundaries; see q66's note in dedup.py).
@@ -25,6 +25,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table, register_views
+from tf_datapipeline_spark.functions.dialect import (
+    array_transform,
+    broadcast,
+    element_at,
+    fold_dot,
+    fold_l2,
+    fold_norm2,
+    fold_sum,
+    int_range_rows,
+    ordered_string_agg,
+    ordered_sum,
+    series,
+    shl1,
+    xor,
+)
 from tf_datapipeline_spark.registry import query
 
 _DIM = 64
@@ -81,82 +96,15 @@ def _materialize_dims(spark: SparkSession, sf_dir: str) -> None:
     _DIMS_MEMO[key].createOrReplaceTempView("dims_mat")
 
 
-# ---------------------------------------------------------------------------
-# ORDER-PINNED IEEE-double fold snippets — the q66 migration recipe,
-# applied engine-wide in round 7 (the round-6 verdict's task 4: retire
-# every remaining double->DECIMAL oracle device before the hazard fires
-# a fourth time). Both engines fold the SAME packed array left to right
-# (Spark aggregate()/zip_with() == DuckDB list_reduce()/list_zip()), so
-# every intermediate double — and the emitted sum — is bit-identical by
-# construction: float32 elements cast to double exactly, each product
-# rounds once identically (IEEE mult is commutative and deterministic),
-# each running sum rounds once identically. Spark's CAST(0 AS DOUBLE)
-# init is bit-inert (0.0 + t == t for every t except -0.0, which would
-# need an exact-zero first product — the gaussian corpus has none; q66's
-# in-gate fold has accepted the same convention since round 6). The old
-# per-term CAST(x AS DECIMAL(38,12)) device bought order-independence
-# but inherited DuckDB's vectorized half-even double->decimal
-# mis-rounding near half-ulp boundaries (pinned in
-# tests/test_properties.py::test_duckdb_decimal_cast_misrounds...).
-# ---------------------------------------------------------------------------
 def _seq_norm2(mat: "np.ndarray") -> "np.ndarray":
     """Row-wise sum of squares with LEFT-TO-RIGHT accumulation —
-    bit-identical to fold_norm2's SQL fold (numpy .sum() pairwise-sums
+    bit-identical to dialect.fold_norm2's SQL fold (numpy .sum() pairwise-sums
     and would drift in the last ulp; verified bit-equal against DuckDB
     list_reduce on the real corpus in the r10 session)."""
     acc = np.zeros(len(mat))
     for i in range(mat.shape[1]):
         acc = acc + mat[:, i] * mat[:, i]
     return acc
-
-
-def fold_norm2(dialect: str, e: str) -> str:
-    """Sum of squares of a packed float array, identical fold order in
-    both dialects."""
-    if dialect == "spark":
-        return (
-            f"aggregate(transform({e}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform({e},"
-        " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, t) -> acc + t)"
-    )
-
-
-def fold_dot(dialect: str, a: str, b: str) -> str:
-    """Dot product of two packed float arrays, identical fold order in
-    both dialects."""
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b},"
-            " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform(list_zip({a}, {b}),"
-        " s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)),"
-        " (acc, t) -> acc + t)"
-    )
-
-
-def fold_l2(dialect: str, a: str, b: str) -> str:
-    """Squared L2 distance of two packed float arrays, identical fold
-    order in both dialects (differences and squares each round once,
-    identically; terms are >= 0 so the 0.0 init is bit-inert)."""
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b},"
-            " (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform(list_zip({a}, {b}),"
-        " s -> (CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))"
-        " * (CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))),"
-        " (acc, t) -> acc + t)"
-    )
 
 
 def _knn_sql(dialect: str) -> str:
@@ -517,7 +465,7 @@ def _kmeans_step_sql(dialect: str) -> str:
     cells = ", ".join(
         f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
     )
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "c")
     return f"""
     WITH dims AS ({_dims_cte(dialect)}),
     cells(cell, cvec_id) AS (VALUES {cells}),
@@ -587,33 +535,23 @@ def _pq_dists_ctes(dialect: str, n_codewords: int | None = None) -> str:
         f"({k}, {8 + _CENTROID_STRIDE * k})"
         for k in range(n_codewords or _PQ_CODES)
     )
-    if dialect == "spark":
-        subs = "SELECT explode(sequence(0, 7)) AS sub"
-        # BROADCAST hints pin the build sides to the BOUNDED relations:
-        # without them Catalyst broadcast the (corpus x 8-sub) side of
-        # the second cross join and streamed the 8-row codeword side —
-        # harmless at test scale, a corpus-sized broadcast at 100 TB
-        # (caught replacing the r6 name-allowlist with the structural
-        # bounded-build-side audit in test_plans.py).
-        hint = "/*+ BROADCAST(s), BROADCAST(c) */ "
-        fold = """
-             aggregate(
-               transform(transform(sequence(1, 8),
-                   i -> CAST(element_at(v.embedding, s.sub * 8 + i) AS DOUBLE)
-                        - CAST(element_at(c.cemb, s.sub * 8 + i) AS DOUBLE)),
-                 d -> d * d),
-               CAST(0 AS DOUBLE), (a, b) -> a + b)"""
-    else:
-        hint = ""
-        subs = "SELECT CAST(unnest(range(8)) AS INTEGER) AS sub"
-        fold = """
-             list_reduce(
-               list_transform(
-                 list_transform(generate_series(1, 8),
-                   i -> CAST(v.embedding[s.sub * 8 + i] AS DOUBLE)
-                        - CAST(c.cemb[s.sub * 8 + i] AS DOUBLE)),
-                 d -> d * d),
-               (a, b) -> a + b)"""
+    # BROADCAST hints pin the build sides to the BOUNDED relations:
+    # without them Catalyst broadcast the (corpus x 8-sub) side of the
+    # second cross join and streamed the 8-row codeword side — harmless
+    # at test scale, a corpus-sized broadcast at 100 TB (caught replacing
+    # the r6 name-allowlist with the structural bounded-build-side audit
+    # in test_plans.py).
+    hint = broadcast(dialect, "s", "c")
+    subs = int_range_rows(dialect, 8, "sub")
+    diffs = array_transform(
+        dialect,
+        series(dialect, 1, 8),
+        f"i -> CAST({element_at(dialect, 'v.embedding', 's.sub * 8 + i')} AS DOUBLE)"
+        f" - CAST({element_at(dialect, 'c.cemb', 's.sub * 8 + i')} AS DOUBLE)",
+    )
+    fold = fold_sum(
+        dialect, array_transform(dialect, diffs, "d -> d * d"), "(a, b) -> a + b"
+    )
     return f"""
     cw(code, cwvec_id) AS (VALUES {cws}),
     cwe AS (
@@ -1075,13 +1013,7 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-pass structure, no shuffle either way.)
 # --------------------------------------------------------------------------
 def _sq_encode_sql(dialect: str) -> str:
-    if dialect == "spark":
-        digest = (
-            "md5(array_join(transform(array_sort(collect_list(struct(pos, code))), "
-            "s -> CAST(s.code AS STRING)), ','))"
-        )
-    else:
-        digest = "md5(string_agg(CAST(code AS VARCHAR), ',' ORDER BY pos))"
+    digest = f"md5({ordered_string_agg(dialect, 'code', 'pos')})"
     return f"""
     WITH dims AS ({_dims_cte(dialect)}),
     rng AS (
@@ -1443,33 +1375,21 @@ _BH_TOPK = 10
 
 
 def _binary_hamming_sql(dialect: str) -> str:
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"({a} ^ {b})"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"xor({a}, {b})"
     return f"""
     WITH codes AS (
       SELECT vec_id,
              SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {shl("pos - 1")} ELSE 0 END) AS w0,
+                      THEN {shl1(dialect, "pos - 1")} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {shl("pos - 33")} ELSE 0 END) AS w1
+                      THEN {shl1(dialect, "pos - 33")} ELSE 0 END) AS w1
       FROM ({_dims_cte(dialect)}) d
       GROUP BY vec_id
     ),
     scored AS (
-      SELECT {"/*+ BROADCAST(q) */ " if dialect == "spark" else ""}
+      SELECT {broadcast(dialect, "q")}
              q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST(bit_count({bxor("q.w0", "c.w0")})
-                  + bit_count({bxor("q.w1", "c.w1")}) AS INT) AS hamming
+             CAST(bit_count({xor(dialect, "q.w0", "c.w0")})
+                  + bit_count({xor(dialect, "q.w1", "c.w1")}) AS INT) AS hamming
       FROM codes q JOIN codes c
         ON q.vec_id < {_N_QUERIES} AND c.vec_id >= {_N_QUERIES}
     ),
@@ -1544,7 +1464,7 @@ def _mmr_collect_rows() -> int:
 def _mmr_shortlist_sql(dialect: str) -> str:
     """The distributed part, shared by both engines: per-query
     top-_MMR_POOL shortlist (rel) and its pairwise sims."""
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "q")
     return f"""
     WITH norms AS (
       SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
@@ -1711,7 +1631,7 @@ _RADIUS_TAU = 0.25  # ~2 sigma for this corpus (random gaussian: cos has
 
 
 def _radius_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "q")
     return f"""
     WITH norms AS (
       SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
@@ -1753,7 +1673,7 @@ def q7g_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the filtered candidate set only.
 # --------------------------------------------------------------------------
 def _filtered_knn_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "q")
     return f"""
     WITH norms AS (
       SELECT vec_id, label, embedding,
@@ -1809,26 +1729,14 @@ _REC_K = 10  # recall@10 over q7e's Hamming codes (same k as _BH_TOPK)
 
 
 def _recall_eval_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"({a} ^ {b})"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"xor({a}, {b})"
+    hint = broadcast(dialect, "q")
     return f"""
     WITH codes AS (
       SELECT vec_id,
              SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {shl("pos - 1")} ELSE 0 END) AS w0,
+                      THEN {shl1(dialect, "pos - 1")} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {shl("pos - 33")} ELSE 0 END) AS w1
+                      THEN {shl1(dialect, "pos - 33")} ELSE 0 END) AS w1
       FROM ({_dims_cte(dialect)}) d
       GROUP BY vec_id
     ),
@@ -1843,10 +1751,10 @@ def _recall_eval_sql(dialect: str) -> str:
           -- side provably bounded for the NLJ audit, and the hint pins
           -- the build side regardless of stats (Catalyst built the
           -- corpus codes side here before — caught by the audit)
-          SELECT {hint.replace("(q)", "(qc)")}qc.vec_id AS query_id,
+          SELECT {broadcast(dialect, "qc")}qc.vec_id AS query_id,
                  c.vec_id AS neighbor_id,
-                 CAST(bit_count({bxor("qc.w0", "c.w0")})
-                      + bit_count({bxor("qc.w1", "c.w1")}) AS INT) AS hamming
+                 CAST(bit_count({xor(dialect, "qc.w0", "c.w0")})
+                      + bit_count({xor(dialect, "qc.w1", "c.w1")}) AS INT) AS hamming
           FROM (SELECT * FROM codes WHERE vec_id < {_N_QUERIES}) qc
           JOIN codes c ON c.vec_id >= {_N_QUERIES}
         ) s
@@ -1920,16 +1828,8 @@ def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-label arithmetic on ~128-element lists. No windows, no collects.
 # --------------------------------------------------------------------------
 def _centroid_drift_sql(dialect: str) -> str:
-    if dialect == "spark":
-        def fold(expr: str) -> str:
-            return (
-                "aggregate(transform(array_sort(collect_list("
-                f"named_struct('p', pos, 'v', {expr}))), x -> x.v), "
-                "CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-            )
-    else:
-        def fold(expr: str) -> str:
-            return f"list_reduce(list({expr} ORDER BY pos), (acc, t) -> acc + t)"
+    def fold(expr: str) -> str:
+        return ordered_sum(dialect, expr, "pos")
 
     return f"""
     WITH dims AS ({_dims_cte(dialect)}),
@@ -2334,10 +2234,10 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
-    # r12 (r11 verdict task 2, A/B'd via tools/exp_q7m.py): hop-superset
-    # prescore replaces the r11 unrolled per-round rescore. The beam can
-    # only ever visit nodes within _GANN_ROUNDS edge-hops of the seed
-    # set — a reachable set derivable from edge METADATA alone, bounded
+    # r12 (r11 verdict task 2, A/B in OPTIMIZATION_r12.md "Task 2 — q7m
+    # graph-ANN"): hop-superset prescore replaces the r11 unrolled
+    # per-round rescore. The beam can only ever visit nodes within
+    # _GANN_ROUNDS edge-hops of the seed set — a reachable set derivable from edge METADATA alone, bounded
     # by seeds · out_degree^T regardless of corpus size — so ONE corpus
     # pass (semi-joined down to the reachable set, then scored against
     # the broadcast query set) replaces the three per-round corpus
@@ -2595,8 +2495,8 @@ def _ivf_probe_prelude(dialect: str) -> str:
     cells = ", ".join(
         f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
     )
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
-    qhint = "/*+ BROADCAST(qc) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "c")
+    qhint = broadcast(dialect, "qc")
     return f"""cells(cell, cvec_id) AS (VALUES {cells}),
     cente AS (
       SELECT c.cell, e.embedding AS cemb
@@ -2653,7 +2553,7 @@ def _ivf_probe_tail(dialect: str) -> str:
     ),
     exact AS (
       SELECT query_id, vec_id FROM (
-        SELECT {"/*+ BROADCAST(qn) */ " if dialect == "spark" else ""}
+        SELECT {broadcast(dialect, "qn")}
                qn.vec_id AS query_id, vn.vec_id,
                ROW_NUMBER() OVER (
                  PARTITION BY qn.vec_id
@@ -2742,7 +2642,7 @@ def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver.
 # --------------------------------------------------------------------------
 def _index_build_tail(dialect: str) -> str:
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "c")
     return f"""
     scente AS (
       SELECT s.cell, e.embedding AS cemb
@@ -2842,7 +2742,7 @@ def _silhouette_sql(dialect: str) -> str:
     cells = ", ".join(
         f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
     )
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
+    hint = broadcast(dialect, "c")
     return f"""
     WITH cells(cell, cvec_id) AS (VALUES {cells}),
     cente AS (

@@ -19,6 +19,16 @@ from tf_datapipeline_spark.catalog import (
     load_table,
     register_views,
 )
+from tf_datapipeline_spark.functions.dialect import (
+    array_filter,
+    array_size,
+    explode,
+    int_div,
+    int_range,
+    split_str,
+    split_ws,
+    string_type,
+)
 from tf_datapipeline_spark.functions.texthash import (
     sql_hash32,
     sql_hash32_dialect,
@@ -30,7 +40,7 @@ from tf_datapipeline_spark.registry import query
 # requires an active SparkSession).
 def _tokens_spark():
     return F.split(F.trim(F.col("text")), r"\s+")
-_TOKENS_SQL = "regexp_split_to_array(trim(text), '\\s+')"
+_TOKENS_SQL = split_ws("duckdb", "text")
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _SW_LIST = ", ".join(f"'{w}'" for w in _STOPWORDS)
@@ -1711,17 +1721,10 @@ def _dsir_body(dialect: str) -> str:
     from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
 
     h = sql_hash32_dialect("'dsir-' || tok", dialect)
-    if dialect == "spark":
-        toks = "SELECT doc_id, lang, explode(split(text, ' ')) AS tok FROM documents"
-        spine = f"SELECT explode(sequence(0, {_DSIR_B - 1})) AS bucket"
-        idiv = "DIV"
-    else:
-        toks = (
-            "SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok"
-            " FROM documents"
-        )
-        spine = f"SELECT unnest(range({_DSIR_B})) AS bucket"
-        idiv = "//"
+    tok = explode(dialect, split_str(dialect, "text", "' '"))
+    toks = f"SELECT doc_id, lang, {tok} AS tok FROM documents"
+    spine = f"SELECT {explode(dialect, int_range(dialect, _DSIR_B))} AS bucket"
+    idiv = int_div(dialect)
     return f"""
     WITH tok AS (
       SELECT doc_id, lang, ({h}) % {_DSIR_B} AS bucket
@@ -1877,10 +1880,7 @@ _VOCAB_DRIFT_TOP = 50
 
 
 def _vocab_drift_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS token"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS token"
+    tok = f"{explode(dialect, split_ws(dialect, 'text'))} AS token"
     return f"""
     WITH toks AS (
       SELECT CAST(doc_id % 2 AS INT) AS half, {tok} FROM documents
@@ -1928,14 +1928,11 @@ def q5r_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IEEE divisions.
 # --------------------------------------------------------------------------
 def _corpus_health_sql(dialect: str) -> str:
-    if dialect == "spark":
-        toks = "split(trim(text), '\\\\s+')"
-        nstop = f"size(filter({toks}, t -> t IN ({_SW_LIST})))"
-        ntok = f"size({toks})"
-    else:
-        toks = "regexp_split_to_array(trim(text), '\\s+')"
-        nstop = f"length(list_filter({toks}, t -> t IN ({_SW_LIST})))"
-        ntok = f"length({toks})"
+    toks = split_ws(dialect, "text")
+    nstop = array_size(
+        dialect, array_filter(dialect, toks, f"t -> t IN ({_SW_LIST})")
+    )
+    ntok = array_size(dialect, toks)
     return f"""
     WITH perdoc AS (
       SELECT source, n_chars, md5(text) AS th,
@@ -2209,10 +2206,11 @@ def _bpe_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize-then-pack composite, which lays the encoded token counts
     out into fixed-length training sequences."""
     docs = load_table(spark, sf_dir, "documents")
-    # adaptive repartition measured WORSE here (tools/exp_repart2.py:
-    # on 2.1-2.9s vs off 1.3-1.7s): the whitespace tokenize is cheap
-    # enough that the extra shuffle (paid twice — toks derives twice)
-    # outweighs the parallelism; only md5-per-position streams win it
+    # adaptive repartition measured WORSE here (OPTIMIZATION_r12.md
+    # "Adaptive scan parallelism": on 2.1-2.9s vs off 1.3-1.7s): the
+    # whitespace tokenize is cheap enough that the extra shuffle (paid
+    # twice — toks derives twice) outweighs the parallelism; only
+    # md5-per-position streams win it
     toks = docs.select(
         "doc_id", F.explode(_tokens_spark()).alias("tok")
     ).filter(F.length("tok") >= 1)
@@ -2316,7 +2314,7 @@ _CLF_BUCKETS = 4096
 
 def _clf_weight_sql(dialect: str) -> str:
     """w[b] for a bucket column `b`: deterministic stand-in weights."""
-    s = "CAST(b AS STRING)" if dialect == "spark" else "CAST(b AS VARCHAR)"
+    s = f"CAST(b AS {string_type(dialect)})"
     h = sql_hash32_dialect(f"concat('w|', {s})", dialect)
     return f"CAST({h} % 2001 - 1000 AS BIGINT)"
 

@@ -1061,10 +1061,13 @@ def _stream_ingest_oracle() -> str:
         _K,
         _with_prelude,
     )
-    from tf_datapipeline_spark.operators.text import _SW_LIST, _TOKENS_SQL
+    from tf_datapipeline_spark.functions.dialect import split_ws
+    from tf_datapipeline_spark.operators.text import _SW_LIST
 
-    mcols_half1 = ", ".join(f"m{i}" for i in range(_K // 2))
-    mcols_half2 = ", ".join(f"m{i}" for i in range(_K // 2, _K))
+    def band_cols(alias: str, half: int) -> str:
+        lo = half * (_K // 2)
+        return ", ".join(f"{alias}.m{i}" for i in range(lo, lo + _K // 2))
+
     est = " + ".join(
         f"(CASE WHEN i.m{k} = s.m{k} THEN 1 ELSE 0 END)" for k in range(_K)
     )
@@ -1075,7 +1078,7 @@ def _stream_ingest_oracle() -> str:
     FROM documents d
     WHERE d.doc_id % {_DELTA_MOD} = 0
       AND d.n_chars >= 100
-      AND length(list_filter({_TOKENS_SQL.replace('text', 'd.text')},
+      AND length(list_filter({split_ws("duckdb", "d.text")},
                              t -> t IN ({_SW_LIST}))) > 0
       -- NOT(A OR B) split into two AND'ed NOT EXISTS, one per band, so
       -- each subquery carries a pure band-key EQUALITY the oracle engine
@@ -1089,8 +1092,8 @@ def _stream_ingest_oracle() -> str:
         SELECT 1
         FROM sig s JOIN sig i
           ON i.doc_id % {_DELTA_MOD} <> 0
-         AND concat_ws('|', i.{mcols_half1.replace(', ', ', i.')})
-               = concat_ws('|', s.{mcols_half1.replace(', ', ', s.')})
+         AND concat_ws('|', {band_cols("i", 0)})
+               = concat_ws('|', {band_cols("s", 0)})
          AND CAST(({est}) AS DOUBLE) / {_K} >= 0.5
         WHERE s.doc_id = d.doc_id
       )
@@ -1098,8 +1101,8 @@ def _stream_ingest_oracle() -> str:
         SELECT 1
         FROM sig s JOIN sig i
           ON i.doc_id % {_DELTA_MOD} <> 0
-         AND concat_ws('|', i.{mcols_half2.replace(', ', ', i.')})
-               = concat_ws('|', s.{mcols_half2.replace(', ', ', s.')})
+         AND concat_ws('|', {band_cols("i", 1)})
+               = concat_ws('|', {band_cols("s", 1)})
          AND CAST(({est}) AS DOUBLE) / {_K} >= 0.5
         WHERE s.doc_id = d.doc_id
       )

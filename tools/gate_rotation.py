@@ -16,7 +16,8 @@ makes the rotation schedule explicit and enforceable:
                  any oracle-checked query exceeds K=5 rounds ungated.
   propose  print the next round's 50-slot window: never-gated first
            (registration order), then stalest last-green, skipping
-           rows-only queries — paste into registry.GATE_ORDER_R{N+1}.
+           rows-only queries — replaces registry.GATE_ORDER in place
+           (earlier windows live in git history and CORRECTNESS_r*.json).
 
 Staleness counts driver rows only; every registered oracle is ALSO
 replayed locally each round by the slow pytest tier, which is the
